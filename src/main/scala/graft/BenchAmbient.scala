@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Pure decision logic for Bench's ambient-load self-annotation (r11
   * verdict #1). Three driver rounds produced bench artifacts inflated
   * by decaying co-runner load (the r11 artifact of record: 184.2 s vs
@@ -77,15 +79,17 @@ object BenchAmbient {
     }
   }
 
-  /** Minimal flat {"key": secs} parse for the committed baseline —
-    * same no-JSON-library approach as BenchGate (the build has no
-    * JSON dependency by contract). Missing/unreadable file → empty
+  /** The committed flat {"key": secs} baseline, read with Jackson;
+    * non-numeric entries are skipped. Missing/unreadable file → empty
     * map (the bench still runs; the artifact annotates
-    * rate_vs_baseline as null). */
+    * rate_vs_baseline as null). Bench and BenchGate both read through
+    * this one reader. */
   def readBaseline(path: String): Map[String, Double] =
     try {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val root = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(path))
+      root.properties.asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap
     } catch { case _: Throwable => Map.empty }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
 
 /** Per-key wall decomposition diagnostic (r15): run a registry key N
@@ -16,20 +15,7 @@ object KeyProf {
     val key = args(0)
     val n = if (args.length > 1) args(1).toInt else 5
     val d = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusInt = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpusInt.toString)
-    scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     require(SparkEntry.queries.contains(key), s"unknown key $key")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -49,9 +35,12 @@ object KeyProf {
         tasks.addAndGet(s.stageInfo.numTasks)
       }
     })
-    def compileMs(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getSnapshot.getValues.sum / 1000000L
+    // compiles × mean compile ms: the histogram's reservoir decays, so
+    // summing its values undercounts and a delta can go negative
+    def compileMs(): Double = {
+      val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      h.getCount * h.getSnapshot.getMean
+    }
     for (i <- 1 to n) {
       jobs.set(0); stages.set(0); tasks.set(0); jobWall.set(0)
       val c0 = compileMs()
@@ -63,7 +52,7 @@ object KeyProf {
       println(f"[keyprof] $key run $i: wall $wall%7.3f s  " +
         f"jobs ${jobs.get()}%3d  stages ${stages.get()}%3d  " +
         f"tasks ${tasks.get()}%5d  jobwall ${jobWall.get() / 1e3}%7.3f s  " +
-        f"codegen +${compileMs() - c0}%5d ms  ($rows rows)")
+        f"codegen +${compileMs() - c0}%7.1f ms  ($rows rows)")
     }
     spark.stop()
   }

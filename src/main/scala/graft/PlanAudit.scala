@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 /** Audits every registered query's executed plan for scale smells:
   * cartesian products, broadcast-nested-loop joins, and missing
   * codegen — one finding line each. Callable from the spec suite
-  * (PlanAuditSpec enforces an empty finding list every `sbt test`)
+  * (PlanContractSpec enforces an empty finding list every `sbt test`)
   * and from the CLI main for ad-hoc runs. */
 object PlanAudit {
   // cartesian/BNLJ are legitimate only where the operator IS a cross
@@ -169,20 +169,21 @@ object PlanAudit {
   /** Keys whose RETURNED plan legitimately has no WholeStageCodegen
     * span. `join_skew_aqe` executes the real (codegen'd, skew-split)
     * join during construction — PlanContractSpec asserts
-    * OptimizeSkewedJoin fired in [[graft.operators.Extras2.lastSkewJoinPlan]]
+    * OptimizeSkewedJoin fired in [[graft.operators.Extras2.takeSkewJoinRun]]
     * — and returns that execution's 11 rows as a LocalTableScan
     * instead of lazily re-running the whole join a second time under
     * session confs (r14). */
   val allowCodegenAbsent: Set[String] = Set("join_skew_aqe")
 
   /** For keys whose returned plan is a construction-result local
-    * relation, the plan the audit should actually grade (r15, ADVICE):
-    * without this substitution the smell scan and shuffle budget for
-    * `join_skew_aqe` would audit a LocalTableScan — vacuously clean.
-    * The captured plan is the skew-split join the key exists to run. */
-  def constructionPlan(name: String)
-      : Option[org.apache.spark.sql.execution.SparkPlan] = name match {
-    case "join_skew_aqe" => Option(operators.Extras2.lastSkewJoinExec)
+    * relation, the (plan string, shuffle count) the audit should
+    * actually grade (r15, ADVICE): without this substitution the smell
+    * scan and shuffle budget for `join_skew_aqe` would audit a
+    * LocalTableScan — vacuously clean. The recorded facts describe the
+    * skew-split join the key exists to run. */
+  def constructionPlan(name: String): Option[(String, Int)] = name match {
+    case "join_skew_aqe" =>
+      operators.Extras2.takeSkewJoinRun().map(r => (r.plan, r.shuffles))
     case _ => None
   }
 
@@ -238,97 +239,109 @@ object PlanAudit {
     found
   }
 
-  /** Execute every non-streaming registered query at `d` and return
-    * one "SMELL key: ..." / "ERROR key: ..." line per finding. Empty
-    * result = audit clean. Construction-time Spark jobs (any job
-    * started by `fn` itself, before the audit's own collect) are a
-    * smell unless the key is in [[allowConstructionJobs]]. Each key's
-    * executed shuffle count is checked against [[ShuffleBudgets.map]]
-    * — over budget is a smell, and so is a missing budget entry, so
-    * every new operator must declare its shuffle budget when it
-    * lands (r6 verdict #7: "minimal shuffle" as a failing test, not
-    * prose). */
-  def audit(spark: SparkSession, d: String): Seq[String] =
-    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (name.startsWith("stream_")) Nil
-      else try {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-        }
-        spark.sparkContext.addSparkListener(listener)
-        val df =
-          try { fn(spark, d) }
-          finally {
-            // the bus is async: drain before reading the counter
-            org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-            spark.sparkContext.removeSparkListener(listener)
-          }
-        val constructionJobs = jobs.get()
-        df.collect()
-        // audit the captured construction plan where the returned plan
-        // is just the construction result's local relation (r15)
-        val auditPlan =
-          constructionPlan(name).getOrElse(df.queryExecution.executedPlan)
-        val p = auditPlan.toString
-        val nShuf = countShuffles(auditPlan)
-        val budget = ShuffleBudgets.map.get(name)
-        val smells = Seq(
-          "CartesianProduct" -> p.contains("CartesianProduct"),
-          "BroadcastNestedLoopJoin" -> p.contains("BroadcastNestedLoopJoin"),
-          "codegen-absent" -> (!p.contains("*(") && !name.startsWith("mm_") &&
-            !allowCodegenAbsent.contains(name)),
-          s"driver-action-in-construction ($constructionJobs jobs)" ->
-            (constructionJobs > 0 && !allowConstructionJobs.contains(name)),
-          s"shuffles $nShuf over budget ${budget.getOrElse(-1)}" ->
-            budget.exists(nShuf > _),
-          "no shuffle budget declared" -> budget.isEmpty,
-          "pushdown-absent" ->
-            (mustPushFilters.contains(name) &&
-              !hasPushedFilters(df.queryExecution.executedPlan)))
-          .collect { case (s, true) => s }
-        val crossOk = allowCross.contains(name)
-        val bad = smells.filterNot(s =>
-          crossOk && (s == "CartesianProduct" || s == "BroadcastNestedLoopJoin"))
-        if (bad.nonEmpty) Seq(s"SMELL $name: ${bad.mkString(", ")}") else Nil
-      } catch { case e: Throwable =>
-        Seq(s"ERROR $name: ${String.valueOf(e.getMessage).take(100)}")
+  /** One key's audit measurement: the shuffles its executed plan ran
+    * and the smells found in it. */
+  private final case class Measurement(shuffles: Int, smells: Seq[String])
+
+  /** Build and execute one query, then grade the plan it ran.
+    * Construction-time Spark jobs (any job started by `fn` itself,
+    * before the audit's own collect) are a smell unless the key is in
+    * [[allowConstructionJobs]]. The executed shuffle count is checked
+    * against [[ShuffleBudgets.map]] — over budget is a smell, and so
+    * is a missing budget entry, so every new operator must declare its
+    * shuffle budget when it lands (r6 verdict #7: "minimal shuffle" as
+    * a failing test, not prose). */
+  private def measure(spark: SparkSession, d: String, name: String, fn: QFn): Measurement = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val df =
+      try { fn(spark, d) }
+      finally {
+        // the bus is async: drain before reading the counter
+        org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
       }
+    val constructionJobs = jobs.get()
+    df.collect()
+    val (p, nShuf) = constructionPlan(name).getOrElse {
+      val executed = df.queryExecution.executedPlan
+      (executed.toString, countShuffles(executed))
+    }
+    val budget = ShuffleBudgets.map.get(name)
+    val smells = Seq(
+      "CartesianProduct" -> p.contains("CartesianProduct"),
+      "BroadcastNestedLoopJoin" -> p.contains("BroadcastNestedLoopJoin"),
+      "codegen-absent" -> (!p.contains("*(") && !name.startsWith("mm_") &&
+        !allowCodegenAbsent.contains(name)),
+      s"driver-action-in-construction ($constructionJobs jobs)" ->
+        (constructionJobs > 0 && !allowConstructionJobs.contains(name)),
+      s"shuffles $nShuf over budget ${budget.getOrElse(-1)}" ->
+        budget.exists(nShuf > _),
+      "no shuffle budget declared" -> budget.isEmpty,
+      "pushdown-absent" ->
+        (mustPushFilters.contains(name) &&
+          !hasPushedFilters(df.queryExecution.executedPlan)))
+      .collect { case (s, true) => s }
+    val crossOk = allowCross.contains(name)
+    Measurement(nShuf, smells.filterNot(s =>
+      crossOk && (s == "CartesianProduct" || s == "BroadcastNestedLoopJoin")))
+  }
+
+  /** [[measure]] over every non-streaming registered key, by name; a
+    * key whose build or run threw carries its error message instead. */
+  private def measureAll(spark: SparkSession, d: String)
+      : Seq[(String, Either[String, Measurement])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn) if !name.startsWith("stream_") =>
+        name -> (try Right(measure(spark, d, name, fn)) catch {
+          case e: Throwable => Left(String.valueOf(e.getMessage).take(100))
+        })
     }
 
+  /** One "SMELL key: ..." / "ERROR key: ..." line per finding over the
+    * whole registry at `d`. Empty result = audit clean. */
+  def audit(spark: SparkSession, d: String): Seq[String] =
+    measureAll(spark, d).collect {
+      case (name, Left(err)) => s"ERROR $name: $err"
+      case (name, Right(m)) if m.smells.nonEmpty =>
+        s"SMELL $name: ${m.smells.mkString(", ")}"
+    }
+
+  /** `runMain graft.PlanAudit [counts]` at sf0.001 on a
+    * [[GraftSession]] (cores from `SPARK_GRAFT_CPUS`). The audit exits
+    * 1 on any SMELL or ERROR line; `counts` prints the measured shuffle
+    * count per key as ready-to-paste [[ShuffleBudgets]] entries and
+    * exits 1 if any key failed to run. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (args.contains("counts")) {
-      // budget (re)generation mode: print the measured shuffle count
-      // per key as ready-to-paste map entries (same execution path the
-      // audit gate uses, so the numbers can't diverge from it)
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        if (!name.startsWith("stream_")) {
-          try {
-            val df = fn(spark, "/root/testdata/sf0.001")
-            df.collect()
-            println(s"""    "$name" -> ${countShuffles(df.queryExecution.executedPlan)},""")
-          } catch { case e: Throwable =>
-            println(s"// ERROR $name: ${String.valueOf(e.getMessage).take(80)}")
-          }
-        }
+    val spark = GraftSession.build()
+    val d = "/root/testdata/sf0.001"
+    val (lines, failed) =
+      if (args.contains("counts")) {
+        val measured = measureAll(spark, d)
+        (measured.map {
+          case (name, Right(m)) => s"""    "$name" -> ${m.shuffles},"""
+          case (name, Left(err)) => s"// ERROR $name: $err"
+        }, measured.exists(_._2.isLeft))
+      } else {
+        val findings = audit(spark, d)
+        (findings, findings.nonEmpty)
       }
-    } else audit(spark, "/root/testdata/sf0.001").foreach(println)
+    lines.foreach(println)
     println("AUDIT DONE")
     spark.stop()
+    if (failed) sys.exit(1)
   }
 }
 
-/** Committed per-key shuffle budgets at the audit scale (sf0.001,
-  * local[8], AQE on — the PlanContractSpec environment). Measured by
+/** Committed per-key shuffle budgets at the audit scale (sf0.001, AQE
+  * on). No plan depends on the session's core count, so the numbers
+  * hold for the `local[8]` test session and any `SPARK_GRAFT_CPUS`
+  * main alike. Measured by
   * `runMain graft.PlanAudit counts` and pasted here verbatim; the
   * audit fails any key that EXCEEDS its number (a new shuffle slipped
   * into the plan) or that has NO entry (new operators must declare

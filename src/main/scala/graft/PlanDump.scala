@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for registry keys to files — the
   * optimization-round evidence artifact (plans/r{N}/<key>_{before,after}.txt).
@@ -14,24 +13,8 @@ object PlanDump {
     val outDir = args(0); val suffix = args(1)
     val keys = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val d = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    // same session shape as Bench: derive core count from the env so
-    // dumped plans match the benched plans on any host (r15, ADVICE);
-    // the toInt guard mirrors Bench ("*" is valid for local[*] but not
-    // for shuffle.partitions)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusInt = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpusInt.toString)
-    scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.catalogImplementation", "in-memory")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the same builder as Bench, so dumped plans are the benched plans
+    val spark = GraftSession.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { key =>
       require(SparkEntry.queries.contains(key), s"unknown key $key")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-harness profiler: run one streaming key end-to-end twice
   * (cold + warm) and dump each micro-batch's duration breakdown from
   * the progress events — the ground truth for where the fixed per-key
@@ -11,24 +9,9 @@ object StreamProf {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val key = if (args.length > 1) args(1) else "stream_tumbling"
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-    // same scratch environment as Bench (profiles must measure the
-    // bench's configuration, not a different disk)
-    scratchConfs.foreach { case (k, v) => builder.config(k, v) }
-    builder
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-    // same knob-injection contract as Bench: A/B a conf without a
-    // code change (runStream only overrides its own pinned confs)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k.trim, v.trim) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the same builder (scratch dirs, SPARK_GRAFT_EXTRA_CONF) as Bench,
+    // so a profile measures the bench's configuration
+    val spark = GraftSession.build()
     val fn = SparkEntry.queries(key)
     (1 to 2).foreach { run =>
       val t0 = System.nanoTime()

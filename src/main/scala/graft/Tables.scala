@@ -264,28 +264,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame   = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Scale-adaptive kernel parallelism (r15, guide §2 "make
-    * partitioning scale-adaptive rather than a constant"): the local
-    * testdata ships each table as ONE single-row-group parquet file,
-    * so every scan is one task and any heavy per-row kernel applied
-    * before the first exchange (media decode, gram hashing, n-gram
-    * explodes) runs on ONE core of the session's 32 — measured via
-    * the KeyProf job listener: mm_phash_neardup and llm_decontaminate
-    * execute as 4 single-task stages, ~1.3-1.5 s of serialized
-    * compute. At production scale the corpus arrives as thousands of
-    * splits and scans parallelize naturally, so this helper is a
-    * deliberate NO-OP there: it repartitions (hash on `key`, so the
-    * row→partition map is deterministic regardless of input order)
-    * only when the scan yields fewer partitions than a quarter of the
-    * session parallelism — i.e. exactly the local single-file shape.
-    * Apply it ONLY where the downstream kernel dominates: the
-    * repartition is one extra (tiny, local) exchange, which is a pure
-    * loss for cheap projections. */
-  def parallelizeKernel(s: SparkSession, df: DataFrame, key: String): DataFrame = {
-    val p = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 4 < p) df.repartition(p, col(key)) else df
-  }
 }
 
 /** Determinism helpers for DuckDB-oracle parity.

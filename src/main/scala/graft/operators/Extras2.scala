@@ -540,14 +540,19 @@ object Extras2 {
       .orderBy("event_type")
   }
 
-  /** Executed (adaptive-final) plan of the last [[joinSkewAqe]] run —
-    * spec diagnostic for the OptimizeSkewedJoin assertion. */
-  @volatile var lastSkewJoinPlan: String = ""
+  /** Facts about the skew-split join a [[joinSkewAqe]] run executed:
+    * its executed (adaptive-final) plan string and shuffle count. */
+  final case class SkewJoinRun(plan: String, shuffles: Int)
 
-  /** The same executed plan as a live SparkPlan, so PlanAudit can run
-    * its structural checks (countShuffles, smell scan) against the
-    * construction-time join instead of the returned LocalTableScan. */
-  @volatile var lastSkewJoinExec: org.apache.spark.sql.execution.SparkPlan = _
+  /** The last run's facts, never the live plan (a static SparkPlan
+    * would pin the run's whole query tree for the JVM's life). */
+  private val lastSkewJoin =
+    new java.util.concurrent.atomic.AtomicReference[SkewJoinRun]()
+
+  /** Facts of the last [[joinSkewAqe]] run, cleared on read: PlanAudit
+    * grades them in place of the returned LocalTableScan, and
+    * PlanContractSpec asserts the skew split in the plan string. */
+  def takeSkewJoinRun(): Option[SkewJoinRun] = Option(lastSkewJoin.getAndSet(null))
 
   /** AQE skew-join under a deliberately skewed key distribution — the
     * runtime half of the skew story at BENCH scale (agg_salted_skew is
@@ -558,8 +563,8 @@ object Extras2 {
     * must split the hot reducer partition at runtime instead of one
     * straggler task dragging the stage — at 100 TB the difference
     * between a 5-minute and a 5-hour join. The skewed execution runs
-    * INSIDE the conf scope (plan captured in [[lastSkewJoinPlan]] /
-    * [[lastSkewJoinExec]]); its own ~11 collected rows return as a
+    * INSIDE the conf scope (its facts recorded for
+    * [[takeSkewJoinRun]]); its own ~11 collected rows return as a
     * local relation (r14) — no second execution under session confs,
     * and the conf restore runs before anything downstream executes,
     * so nothing leaks to later keys. PlanAudit audits the CAPTURED
@@ -601,8 +606,8 @@ object Extras2 {
     val rows = try {
       val skewed = build()
       val out = skewed.collect() // ~11 aggregated rows; runs the skew-split join
-      lastSkewJoinPlan = skewed.queryExecution.executedPlan.toString
-      lastSkewJoinExec = skewed.queryExecution.executedPlan
+      val exec = skewed.queryExecution.executedPlan
+      lastSkewJoin.set(SkewJoinRun(exec.toString, graft.PlanAudit.countShuffles(exec)))
       (out, skewed.schema)
     } finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)

@@ -498,10 +498,7 @@ object LlmSimilarity {
     * the vector side, and the fusion joins two ≤(probes × 20)-row
     * lists. */
   val llmHybridSearch: QFn = (s, d) => {
-    // parallelizeKernel (r15): the tokenize + explode feeding the tf
-    // table ran on the single-task local scan (KeyProf: 18 single-
-    // task stages); a no-op at production split counts
-    val docs = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val docs = Tables.documents(s, d)
       .select(col("doc_id"), words.as("w"))
     val terms = docs.select(col("doc_id"), explode(col("w")).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).cast("double").as("tf"))
@@ -628,9 +625,7 @@ object LlmSimilarity {
     // so the whole signature projection is one fused per-row pass (the
     // composed transform() chain was CodegenFallback and re-tokenized
     // the document once per gram)
-    // parallelizeKernel (r15): that fused pass still ran on the
-    // single-task local scan — one core of 32; no-op at scale
-    Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id").select(
+    Tables.documents(s, d).select(
       col("doc_id"),
       graft.functions.MinhashSigs(
         graft.functions.HashedBigrams(col("text"), MersennePrime),
@@ -708,7 +703,7 @@ object LlmSimilarity {
     // hashed gram sets: intersect/union counts over longs equal the
     // string-gram counts (no-collision assumption shared by the whole
     // gram pipeline), at a fraction of the compare cost
-    val grams = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val grams = Tables.documents(s, d)
       .select(col("doc_id"), graft.functions.HashedBigrams(col("text")).as("grams"))
       .localCheckpoint() // derive once for both attachment sides (r14)
       .hint("shuffle_hash")
@@ -748,7 +743,7 @@ object LlmSimilarity {
     // side is one partition's grams (bounded by the doc-id shuffle),
     // which is also the right cluster shape — payload moves once,
     // no sort files.
-    val grams = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val grams = Tables.documents(s, d)
       .select(col("doc_id"), graft.functions.HashedBigrams(col("text")).as("grams"))
       .localCheckpoint() // derive once for both attachment sides (r14)
       .hint("shuffle_hash")
@@ -961,7 +956,7 @@ object LlmSimilarity {
     * gives the same Hamming-banding semantics. */
   val llmSimhash: QFn = (s, d) => {
     val md5hex = md5(col("w"))
-    val tok = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val tok = Tables.documents(s, d)
       .select(col("doc_id"), explode(array_distinct(words)).as("w"))
       .withColumn("h",
         shiftleft(conv(substring(md5hex, 17, 8), 16, 10).cast("long"), 32)
@@ -1017,9 +1012,7 @@ object LlmSimilarity {
     // 100 TB shape (one corpus read + local-disk reuse vs six full
     // re-reads). Measured same-window A/B at sf0.1 (subset bench, N=3,
     // jaccard+containment together): see OPTIMIZATION_r14.md.
-    // parallelizeKernel (r15): single-task local scan ran the gram
-    // kernel on one core; no-op at production split counts
-    ngramJaccardOn(Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    ngramJaccardOn(Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         graft.functions.HashedBigrams(col("text")).as("hg"))
       .localCheckpoint(), 0.3)
@@ -1071,7 +1064,7 @@ object LlmSimilarity {
     val tau = 0.5
     // localCheckpoint: same derive-once rationale as llmNgramJaccard
     // (postings + both verify sides re-derived the grams 5× without it)
-    val g = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val g = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         graft.functions.HashedBigrams(col("text")).as("hg"))
       .localCheckpoint()

@@ -520,11 +520,7 @@ object LlmText {
         sequence(lit(0), size(words) - 3),
         i => concat_ws(" ", slice(words, i + 1, lit(3))))))
       .otherwise(array().cast("array<string>"))
-    // parallelizeKernel (r15): the 3-gram HOF chain is interpreted
-    // (CodegenFallback) and ran on the single-task local scan — one
-    // core of 32 (KeyProf: 4 single-task stages, ~1.5 s serialized
-    // jobwall); a no-op at production split counts
-    val docs = Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")
+    val docs = Tables.documents(s, d)
     val evalG = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("eval_id"), explode(grams3).as("gram"))
     val trainG = docs.filter(col("doc_id") % 10 =!= 0)

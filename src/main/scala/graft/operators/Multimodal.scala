@@ -223,12 +223,7 @@ object Multimodal {
   // drift); the decode kernel itself is [[narrowHashes]], shared with
   // the incremental key's index builder
   val mmPhashNeardup: QFn = (s, d) =>
-    // parallelizeKernel (r15): the single-file local scan ran the
-    // whole decode on ONE core (KeyProf: 4 single-task stages,
-    // ~1.3 s serialized); a no-op at production split counts
-    phashPairs(narrowHashes(
-      Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")),
-      narrowBands, PhashTau)
+    phashPairs(narrowHashes(Tables.documents(s, d)), narrowBands, PhashTau)
 
   /** Generalized multi-word average-hash — the "wider hash" half of
     * the scale knob documented on [[mmPhashNeardup]]: `bits` blocks,
@@ -368,10 +363,7 @@ object Multimodal {
     * is env-raised (SPARK_GRAFT_PHASH_PROBE_N) and recorded in
     * ARCHIVE.md's round-11 delta. */
   val mmPhashWide: QFn = (s, d) =>
-    // parallelizeKernel: same single-core decode fix as the narrow key
-    phashPairs(wideHashes(
-      Tables.parallelizeKernel(s, Tables.documents(s, d), "doc_id")),
-      phashWideBands, PhashTau)
+    phashPairs(wideHashes(Tables.documents(s, d)), phashWideBands, PhashTau)
 
   /** `mm_phash_band_stats`: per-band bucket statistics of the wide
     * hash index — (band, distinct bucket values, max bucket size,

@@ -33,16 +33,4 @@ package object graft {
     val root = scratchRoot
     if (root == "/dev/shm") "/dev/shm/graft_local" else root
   }
-
-  /** The scratch session-conf pair every harness main (and the shared
-    * test session) must apply IDENTICALLY — one definition, four
-    * builder sites, so a future scratch tweak cannot leave the
-    * profiler measuring a different configuration than the bench
-    * (the r14 review's duplication finding). Checkpoint-file
-    * checksums are off because every checkpoint here is throwaway
-    * tmpfs state — they protect durable remote checkpoints. */
-  def scratchConfs: Seq[(String, String)] = Seq(
-    "spark.local.dir" -> scratchLocalDir,
-    "spark.sql.streaming.stateStore.rocksdb.checkpointFileChecksumEnabled" ->
-      "false")
 }

@@ -63,7 +63,7 @@ class PlanContractSpec extends SparkTestBase {
     if (requireSf(sfData)) {
       val df = operators.Extras2.joinSkewAqe(spark, sfData)
       assert(df.count() > 0)
-      val p = operators.Extras2.lastSkewJoinPlan
+      val p = operators.Extras2.takeSkewJoinRun().map(_.plan).getOrElse("")
       assert(p.contains("skew=true") || p.contains("skewed"),
         s"AQE did not split the skewed join partition:\n$p")
     }
